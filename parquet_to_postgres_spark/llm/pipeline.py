@@ -274,7 +274,7 @@ def curate_increment(
     from .dedup import (
         band_keys,
         dedup_repeated_spans,
-        minhash_signatures_rowwise,
+        minhash_profiles_arrow,
         near_dedup_corpus,
     )
     from .text import normalize_text, normalize_unicode, scrub_pii
@@ -357,9 +357,7 @@ def curate_increment(
     # each re-shingled and re-hashed the batch from scratch — two full
     # extra passes of 128 hash evaluations per shingle).
     bands = band_keys(
-        minhash_signatures_rowwise(
-            cur, num_hashes, text_col, id_col, shingle_n
-        ),
+        minhash_profiles_arrow(cur, num_hashes, text_col, id_col, shingle_n),
         num_hashes,
         rows_per_band,
         id_col,

@@ -194,12 +194,12 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Unit is the character shingle, not the word token: the shingle space
     is combinatorially large, so unrelated docs rarely collide (word
-    tokens degenerate on narrow vocabularies — see llm/dedup.shingles).
+    tokens degenerate on narrow vocabularies).
     Banding is the textbook 128 permutations in 16 bands of 8 rows —
     ~95% recall at Jaccard 0.8, ~0.1% collision rate for the
     corpus-typical 0.2–0.35 pairs, so candidates stay ~linear in the
-    true-near-dup count.  Signatures are dictionary-free (md5 unit ids):
-    the whole profile job is one shuffle.
+    true-near-dup count.  Signatures are dictionary-free (md5 unit ids)
+    and the profile job has no aggregate shuffle.
 
     At 100 TB: candidate generation is an equi-shuffle on (band, key);
     only candidate pairs pay the exact-Jaccard array intersect."""
@@ -207,7 +207,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Eager checkpoint: the profile subtree feeds banding AND both
     # sides of the verify join, and those consumers launch concurrently
     # (broadcast exchanges are eager) — an unmaterialized subtree would
-    # race and recompute shingle+dict+agg 3x.  stable_checkpoint
+    # race and rerun the profile kernel 3x.  stable_checkpoint
     # materializes eagerly and truncates lineage, and upgrades to a
     # reliable cluster-FS checkpoint when the session has a checkpoint
     # dir (local blocks die with an executor).

@@ -134,8 +134,8 @@ def test_salted_agg_equals_plain_groupby(spark):
 
 def test_minhash_signature_is_set_function(spark):
     """Signatures depend only on the token SET — word order and repeats
-    must not matter (set semantics of the shingle stage)."""
-    from parquet_to_postgres_spark.llm.dedup import minhash_profiles
+    must not matter (set semantics of the unit stage)."""
+    from parquet_to_postgres_spark.llm.dedup import minhash_profiles_arrow
 
     df = spark.createDataFrame(
         [
@@ -145,7 +145,7 @@ def test_minhash_signature_is_set_function(spark):
         ],
         "doc_id long, text string",
     )
-    out = minhash_profiles(df).toPandas().set_index("doc_id")
+    out = minhash_profiles_arrow(df, shingle_n=None).toPandas().set_index("doc_id")
     sig = lambda i: tuple(out.loc[i][f"mh{j}"] for j in range(8))  # noqa: E731
     assert sig(1) == sig(2), "order/multiplicity changed the signature"
     assert sig(1) != sig(3), "different token sets must (generically) differ"
@@ -154,17 +154,20 @@ def test_minhash_signature_is_set_function(spark):
 
 def test_minhash_profiles_arrow_equivalence(spark):
     """The zero-shuffle Arrow/numpy profile kernel must be BIT-identical
-    to the aggregate path — same md5 60-bit unit ids, same affine mins,
-    same sorted token-id set — on the real fixture (the declared-query
-    config: char-5-gram shingles) and in word-token mode, including the
-    edge cases: doc shorter than the shingle width (emits NO row, like
-    the empty groupBy), empty text, NULL text, repeated tokens, runs of
-    spaces (empty word tokens)."""
-    from parquet_to_postgres_spark.llm.dedup import (
-        minhash_profiles,
-        minhash_profiles_arrow,
-    )
+    to the explode→aggregate oracle (tests/_minhash_ref.py) — same md5
+    60-bit unit ids, same affine mins, same sorted token-id set — on the
+    real fixture (the declared-query config: char-5-gram shingles) and
+    in word-token mode, including the edge cases: doc shorter than the
+    shingle width (emits NO row, like the empty groupBy), empty text,
+    NULL text, repeated tokens, runs of spaces (empty word tokens) — for
+    long, int and string doc ids, whose type the kernel passes through."""
+    from parquet_to_postgres_spark.llm.dedup import minhash_profiles_arrow
     from parquet_to_postgres_spark.tables import load_table
+
+    from ._minhash_ref import minhash_profiles
+
+    def fields(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
 
     docs = load_table(spark, SF_SMOKE, "documents")
     agg = minhash_profiles(docs, shingle_n=5)
@@ -172,27 +175,68 @@ def test_minhash_profiles_arrow_equivalence(spark):
     # same column names and types (nullability flags differ — mapInArrow
     # outputs are nullable; the gate compares names + values, and no
     # declared output type changes)
-    assert [(f.name, f.dataType) for f in agg.schema.fields] == [
-        (f.name, f.dataType) for f in arw.schema.fields
-    ]
+    assert fields(agg) == fields(arw)
     assert canon(agg.toPandas()) == canon(arw.toPandas())
 
-    edge = spark.createDataFrame(
-        [
-            (1, "abc"),  # shorter than shingle width 5 -> no row
-            (2, ""),  # empty text -> no row in shingle mode
-            (3, None),  # NULL text -> no row
-            (4, "abcdefgh abcdefgh"),  # repeated shingles collapse
-            (5, "alpha  beta   beta"),  # runs of spaces -> empty tokens
-        ],
-        "doc_id long, text string",
-    )
-    for shingle_n in (5, None):
-        a = minhash_profiles(edge, num_hashes=16, shingle_n=shingle_n)
-        b = minhash_profiles_arrow(edge, num_hashes=16, shingle_n=shingle_n)
-        assert canon(a.toPandas()) == canon(b.toPandas()), (
-            f"shingle_n={shingle_n}"
+    texts = [
+        "abc",  # shorter than shingle width 5 -> no row
+        "",  # empty text -> no row in shingle mode
+        None,  # NULL text -> no row
+        "abcdefgh abcdefgh",  # repeated shingles collapse
+        "alpha  beta   beta",  # runs of spaces -> empty tokens
+    ]
+    for id_type, make_id in (
+        ("long", lambda i: i),
+        ("int", lambda i: i),
+        ("string", lambda i: f"d{i}"),
+    ):
+        edge = spark.createDataFrame(
+            [(make_id(i), t) for i, t in enumerate(texts, 1)],
+            f"doc_id {id_type}, text string",
         )
+        for shingle_n in (5, None):
+            a = minhash_profiles(edge, num_hashes=16, shingle_n=shingle_n)
+            b = minhash_profiles_arrow(edge, num_hashes=16, shingle_n=shingle_n)
+            assert fields(a) == fields(b), f"{id_type} shingle_n={shingle_n}"
+            assert canon(a.toPandas()) == canon(b.toPandas()), (
+                f"{id_type} shingle_n={shingle_n}"
+            )
+
+
+def test_profile_packer_split_equals_unsplit():
+    """The kernel's output packing starts a new RecordBatch before the
+    summed tokset length would cross the int32 list-offset limit.  Driven
+    here with a tiny limit: the split batches must concatenate to exactly
+    the unsplit output, none may exceed the limit unless it holds a
+    single oversized doc, and the id type must pass through."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_to_postgres_spark.llm.dedup import _profile_packer
+
+    rng = np.random.default_rng(3)
+    ids = pa.array([f"d{i}" for i in range(12)])
+    names = ["doc_id", "tokset", "mh0", "mh1", "sz"]
+    rows = [
+        (
+            i,
+            np.arange(size, dtype=np.int64) + 1000 * i,
+            rng.integers(0, 1 << 30, size=2),
+        )
+        for i, size in zip(
+            (0, 2, 3, 5, 6, 7, 8, 11), (1, 4, 3, 9, 2, 2, 5, 1)
+        )
+    ]
+    unsplit = list(_profile_packer(names)(ids, rows))
+    split = list(_profile_packer(names, max_tokens=5)(ids, rows))
+    assert len(unsplit) == 1 and len(split) > 3
+    for b in split:
+        n_tok = len(b.column(1).flatten())
+        assert n_tok <= 5 or b.num_rows == 1
+    assert pa.Table.from_batches(split).equals(pa.Table.from_batches(unsplit))
+    assert unsplit[0].schema.field("doc_id").type == pa.string()
+    assert unsplit[0].column(0).to_pylist() == [f"d{r[0]}" for r in rows]
+    assert list(_profile_packer(names)(ids, [])) == []
 
 
 def _random_docs(spark, n, seed=23):
@@ -253,7 +297,7 @@ def test_minhash_band_pairs_equal_bruteforce_band_sharing(spark):
     from parquet_to_postgres_spark.llm import dedup as D
 
     docs = _random_docs(spark, 40, seed=31)
-    profiles = D.minhash_profiles(docs, num_hashes=16)
+    profiles = D.minhash_profiles_arrow(docs, num_hashes=16, shingle_n=None)
     pairs = D.minhash_band_pairs(profiles, num_hashes=16, rows_per_band=4)
     pdf = profiles.toPandas().set_index("doc_id")
 

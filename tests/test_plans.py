@@ -130,26 +130,9 @@ def test_token_dictionary_has_no_global_window(spark):
     assert "windowspecdefinition(__pid" in p
 
 
-def test_minhash_profiles_single_logical_shuffle(spark):
-    # Dictionary-free signatures: the profile job must be explode ->
-    # per-doc aggregate.  Exactly 2 exchanges allowed — the opt-in
-    # compute spread (round-robin) and the groupBy(doc_id) hash
-    # partitioning.  A third would mean a dictionary join / rank crept
-    # back onto the signature path.
-    from parquet_to_postgres_spark.llm import dedup as D
-    from parquet_to_postgres_spark.tables import Catalog
-
-    t = Catalog(spark, SF_SMOKE)
-    p = plan(D.minhash_profiles(t.documents, shingle_n=5), mode="simple")
-    assert p.count("Exchange") == 2
-    assert "hashpartitioning(doc_id" in p
-    assert "Join" not in p and "Window" not in p
-
-
 def test_minhash_profiles_arrow_zero_shuffle(spark):
-    # r16 kernel pin: the Arrow profile path (now feeding
-    # minhash_near_dup and near_dedup_corpus) must finish in the scan
-    # stage — exactly ONE Exchange (the opt-in compute spread), no
+    # Kernel pin: the Arrow profile path (the package's only MinHash
+    # signature code) must finish in the scan stage — exactly ONE Exchange (the opt-in compute spread), no
     # aggregate exchange, and the Python boundary is MapInArrow
     # (batched), never BatchEvalPython (row-at-a-time).
     from parquet_to_postgres_spark.llm import dedup as D
@@ -161,6 +144,36 @@ def test_minhash_profiles_arrow_zero_shuffle(spark):
     assert "MapInArrow" in p
     assert "BatchEvalPython" not in p
     assert "Join" not in p and "Window" not in p and "Aggregate" not in p
+
+    # ...and it is the signature stage of store dedup (and so of the
+    # streaming writer and curate_increment): the subtree under the
+    # band explode is the kernel over the scan — no Python row UDF, no
+    # aggregate, no join.  A literal store keeps the only Generate on
+    # the batch side.
+    store = spark.createDataFrame([(0, "x")], "band int, key string")
+    p = plan(D.near_dedup_against_store(t.documents, store), mode="simple")
+    sig = _subtree(p, "Generate explode")
+    assert "MapInArrow" in sig and "FileScan parquet" in sig
+    assert "BatchEvalPython" not in p
+    assert "Aggregate" not in sig and "Join" not in sig
+
+
+def _subtree(p: str, marker: str) -> str:
+    """The first plan node whose line contains ``marker``, with all its
+    descendants (later lines indented deeper than it)."""
+    lines = p.splitlines()
+    start = next(i for i, ln in enumerate(lines) if marker in ln)
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    d = depth(lines[start])
+    out = [lines[start]]
+    for ln in lines[start + 1 :]:
+        if not ln.strip() or depth(ln) <= d:
+            break
+        out.append(ln)
+    return "\n".join(out)
 
 
 def test_simhash_pairs_blocked_not_allpairs(spark):

@@ -1,5 +1,5 @@
 """Incremental near-dedup against a historical corpus — batch operator,
-zero-shuffle row-wise signatures, and the streaming foreachBatch path.
+zero-shuffle Arrow-kernel signatures, and the streaming foreachBatch path.
 
 The contract under test: streaming ingest drops exactly the documents
 the BATCH operator would drop (same band keys, same store), because
@@ -26,68 +26,71 @@ def _docs(spark):
     return spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
 
 
-def test_rowwise_signatures_equal_aggregate_signatures(spark):
-    """The HOF per-row signature path must produce bit-identical values
-    to the explode→aggregate path (same unit ids, same affine family)."""
-    docs = _docs(spark)
-    agg = D.minhash_signatures(docs, num_hashes=N_HASHES, shingle_n=5)
-    row = D.minhash_signatures_rowwise(docs, num_hashes=N_HASHES, shingle_n=5)
-    assert agg.columns == row.columns
-    assert agg.exceptAll(row).count() == 0
-    assert row.exceptAll(agg).count() == 0
-    # and the physical difference is real: no Exchange anywhere
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        row.explain(mode="simple")
-    assert "Exchange" not in buf.getvalue()
-
-
 def test_band_keys_skip_null_signatures(spark):
-    """Docs shorter than the shingle width get all-NULL rowwise
-    signatures; band_keys must emit NO keys for them (matching the
-    aggregate path's emit-no-row semantics).  Without the guard every
-    short doc lands on key "" in every band and they all become mutual
-    near-duplicates."""
+    """Docs with no shingles — shorter than the shingle width, empty, or
+    NULL — get no kernel signature row, so band_keys emits NO keys for
+    them and they never pair.  (If they had signatures of empty unit
+    sets, every such doc would land on one shared key in every band and
+    all of them would become mutual near-duplicates.)  Against a store,
+    they have nothing to match and always survive."""
     docs = spark.createDataFrame(
-        [(1, "abc"), (2, "xy"), (3, ""), (4, "a real document long enough")],
+        [
+            (1, "abc"),
+            (2, "xy"),
+            (3, ""),
+            (4, None),
+            (5, "a real document long enough"),
+        ],
         "doc_id long, text string",
     )
-    sigs = D.minhash_signatures_rowwise(docs, num_hashes=N_HASHES, shingle_n=5)
+    sigs = D.minhash_profiles_arrow(docs, num_hashes=N_HASHES)
+    assert {r["doc_id"] for r in sigs.select("doc_id").collect()} == {5}
     bands = D.band_keys(sigs, num_hashes=N_HASHES)
     keyed = {r["doc_id"] for r in bands.select("doc_id").distinct().collect()}
-    assert keyed == {4}
+    assert keyed == {5}
     assert bands.where(F.col("key") == "").count() == 0
     # pair generation therefore never pairs the short docs
     pairs = D.minhash_band_pairs(sigs, num_hashes=N_HASHES)
     assert pairs.count() == 0
+    # a store built from these very docs drops the long one (self-match)
+    # and nothing else
+    store = D.corpus_band_store(docs, num_hashes=N_HASHES)
+    out = D.near_dedup_against_store(docs, store, num_hashes=N_HASHES)
+    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2, 3, 4]
 
 
 def test_near_dedup_against_store_drops_exactly_banded_matches(spark):
     """Every batch doc sharing >= 1 band key with the corpus is dropped,
     every other doc survives with all columns intact."""
+    from ._minhash_ref import minhash_profiles
+
     docs = _docs(spark)
     corpus = docs.where(F.col("doc_id") < 250)
     store = D.corpus_band_store(corpus, num_hashes=N_HASHES)
     out = D.near_dedup_against_store(docs, store, num_hashes=N_HASHES)
     assert out.columns == docs.columns
 
-    # ground truth straight from the band definition
+    # ground truth from the explode->aggregate oracle's signatures and
+    # its own band store
     bands = D.band_keys(
-        D.minhash_signatures(docs, num_hashes=N_HASHES, shingle_n=5),
+        minhash_profiles(docs, num_hashes=N_HASHES, shingle_n=5),
         num_hashes=N_HASHES,
+    )
+    ref_store = (
+        bands.join(corpus.select("doc_id"), "doc_id", "left_semi")
+        .select("band", "key")
+        .distinct()
     )
     expected_dropped = {
         r["doc_id"]
-        for r in bands.join(store, ["band", "key"], "left_semi")
+        for r in bands.join(ref_store, ["band", "key"], "left_semi")
         .select("doc_id")
         .distinct()
         .collect()
     }
     survivors = {r["doc_id"] for r in out.select("doc_id").collect()}
     all_ids = {r["doc_id"] for r in docs.select("doc_id").collect()}
+    assert expected_dropped and survivors
     assert survivors == all_ids - expected_dropped
     # corpus members trivially match their own bands
     assert all(i >= 250 for i in survivors)
