@@ -11,21 +11,25 @@ end-to-end anyway, through the server's native bulk interface:
   ``postgres`` server — JSONB / BYTEA / NUMERIC / TIMESTAMP columns
   included, the exact types the reference's type map gets wrong
   (``main.rs:104-118``);
-- writes go through ``COPY ... FROM STDIN (FORMAT CSV)`` — Postgres's
-  fastest ingest path, and the pattern production Spark→PG pipelines
-  use ("unload + COPY") when per-row JDBC INSERT is the bottleneck;
+- writes go through ``COPY ... FROM STDIN (FORMAT CSV)`` — the one
+  COPY wire, Postgres's fastest ingest path, and the pattern production
+  Spark→PG pipelines use ("unload + COPY") when per-row JDBC INSERT is
+  the bottleneck;
 - reads come back as bounded-range parallel ``COPY ... TO STDOUT``
   scans — the read-side analogue of Spark's partitioned JDBC read.
 
 Scale notes.  CSV lines are rendered JVM-side with ``F.to_csv`` (exact,
-vectorized, inside whole-stage codegen); the Python half of the
-``mapInPandas`` sink only pipes bytes into ONE ``psql`` subprocess per
-partition, so concurrent connections are bounded by the partition count
+vectorized, inside whole-stage codegen).  The Python half of the
+``mapInPandas`` sink BUFFERS its whole partition in memory, then makes
+ONE ``psql`` call per partition, so per-task memory grows with the
+partition and concurrent connections are bounded by the partition count
 exactly like ``JdbcSink.num_partitions`` (the reference's 10-permit
-semaphore, ``main.rs:68``).  On a real cluster each executor streams its
-partitions straight to the server — no driver funnel; the driver only
-runs DDL.  The embedded server manager below exists for tests: point
-``conninfo`` at any real host to use the sink against one.
+semaphore, ``main.rs:68``).  Each task then compares the rows it piped
+with the server's ``COPY n`` tag and fails on a mismatch.  On a real
+cluster each executor ships its partitions straight to the server — no
+driver funnel; the driver only runs DDL.  The embedded server manager
+below exists for tests: point ``conninfo`` at any real host to use the
+sink against one.
 """
 
 from __future__ import annotations
@@ -228,12 +232,13 @@ def run_psql(
     sql: str,
     tuples_only: bool = True,
     stdin: str | None = None,
-    stdin_bytes: bytes | None = None,
 ) -> str:
     """Client-side psql call — used from the driver (DDL) AND from
     executor tasks (COPY), so it depends only on the conninfo dict.
-    ``stdin_bytes`` feeds COPY FROM STDIN (FORMAT BINARY) — psql
-    forwards the stream to the server unaltered while in copy mode."""
+    ``stdin`` feeds COPY FROM STDIN its CSV rows; with it, ``-q`` is
+    dropped so stdout carries each statement's command tag (``COPY n``,
+    for :func:`check_copy_tag`).  Without it, ``-q`` keeps tags such as
+    ``CREATE TABLE`` out of the query output callers parse."""
     cmd = [
         "psql",
         "-h",
@@ -245,25 +250,33 @@ def run_psql(
         "-v",
         "ON_ERROR_STOP=1",
         "-X",
-        "-q",
     ]
+    if stdin is None:
+        cmd.append("-q")
     if tuples_only:
         cmd.append("-At")
     cmd += ["-c", sql]
-    binary = stdin_bytes is not None
     r = subprocess.run(
-        cmd,
-        input=stdin_bytes if binary else stdin,
-        capture_output=True,
-        text=not binary,
-        cwd="/",
-    )
-    err = (
-        r.stderr.decode("utf-8", "replace") if binary else r.stderr
+        cmd, input=stdin, capture_output=True, text=True, cwd="/"
     )
     if r.returncode != 0:
-        raise RuntimeError(f"psql failed ({sql[:120]!r}): {err[-2000:]}")
-    return r.stdout.decode("utf-8", "replace") if binary else r.stdout
+        raise RuntimeError(f"psql failed ({sql[:120]!r}): {r.stderr[-2000:]}")
+    return r.stdout
+
+
+def check_copy_tag(out: str, piped: int, table: str) -> None:
+    """Raise unless psql's unquiet stdout ``out`` ends in the command
+    tag ``COPY <piped>`` — the server's own count of rows it stored.
+    A mismatch (a trigger or rule skipping rows, a truncated pipe) or a
+    missing tag fails the task loudly instead of losing rows silently."""
+    tags = [ln for ln in out.splitlines() if ln.startswith("COPY ")]
+    landed = tags[-1][len("COPY "):] if tags else None
+    if landed != str(piped):
+        raise RuntimeError(
+            f"COPY into {table}: task piped {piped} rows but the server "
+            f"reported {landed if landed is not None else 'no COPY tag'} "
+            f"(psql stdout tail {out[-200:]!r})"
+        )
 
 
 # ----------------------------------------------------------- CSV wire ----
@@ -315,172 +328,6 @@ def prepare_for_copy(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-# -------------------------------------------------------- binary wire ----
-
-# COPY (FORMAT BINARY) per the public protocol docs: signature + flags +
-# extension-length header, per-tuple int16 field count then per-field
-# int32 byte length (-1 = NULL) + payload in each type's binary send
-# format, int16 -1 trailer.  Temporal epochs are 2000-01-01 based.
-_PGCOPY_HEADER = b"PGCOPY\n\xff\r\n\x00" + b"\x00" * 8
-_PGCOPY_TRAILER = b"\xff\xff"
-_PGCOPY_NULL = b"\xff\xff\xff\xff"
-_PG_EPOCH_MICROS = 946_684_800_000_000  # 2000-01-01 minus 1970-01-01
-_PG_EPOCH_DAYS = 10_957
-_NTZ_EPOCH_SQL = "timestamp_ntz'1970-01-01 00:00:00'"
-
-
-def _be(col: "F.Column", nbytes: int) -> "F.Column":
-    """A long-valued column as its low ``nbytes`` big-endian bytes.
-    hex() of a negative long is already the 16-digit two's complement,
-    so the byte slice is exact for int2/int4/int8 alike — and the whole
-    chain (hex/lpad/unhex/substring) stays inside whole-stage codegen."""
-    h = F.unhex(F.lpad(F.hex(col.cast("long")), 16, "0"))
-    return F.substring(h, 9 - nbytes, nbytes)
-
-
-def _len_prefixed(payload: "F.Column") -> "F.Column":
-    return F.concat(_be(F.octet_length(payload), 4), payload)
-
-
-def _binary_cell(f: T.StructField) -> "F.Column":
-    """One field of a PGCOPY tuple: int32 length + binary-send payload,
-    or the -1 NULL marker.  Everything below except the float-bits
-    reflect() call runs in codegen; reflect is still JVM-side (no
-    Python boundary), which the e2e A/B in BASELINE.md prices."""
-    c = F.col(f.name)
-    dt = f.dataType
-    fixed = None  # (nbytes, payload) for fixed-width sends
-    if isinstance(dt, T.LongType):
-        fixed = (8, _be(c, 8))
-    elif isinstance(dt, T.IntegerType):
-        fixed = (4, _be(c, 4))
-    elif isinstance(dt, (T.ShortType, T.ByteType)):  # DDL: SMALLINT
-        fixed = (2, _be(c, 2))
-    elif isinstance(dt, T.BooleanType):
-        fixed = (1, F.when(c, F.lit(b"\x01")).otherwise(F.lit(b"\x00")))
-    elif isinstance(dt, T.DoubleType):
-        bits = F.expr(
-            "reflect('java.lang.Double','doubleToRawLongBits', "
-            f"coalesce(`{f.name}`, 0.0d))"
-        ).cast("long")
-        fixed = (8, _be(bits, 8))
-    elif isinstance(dt, T.FloatType):
-        bits = F.expr(
-            "reflect('java.lang.Float','floatToRawIntBits', "
-            f"coalesce(`{f.name}`, cast(0.0 as float)))"
-        ).cast("long")
-        fixed = (4, _be(bits, 4))
-    elif isinstance(dt, T.TimestampType):
-        # match the CSV path's rendering: the SESSION-LOCAL wall time
-        # lands in the tz-less TIMESTAMP column (cast to NTZ first)
-        micros = F.expr(
-            f"timestampdiff(MICROSECOND, {_NTZ_EPOCH_SQL}, "
-            f"cast(`{f.name}` as timestamp_ntz))"
-        )
-        fixed = (8, _be(micros - F.lit(_PG_EPOCH_MICROS), 8))
-    elif isinstance(dt, T.TimestampNTZType):
-        micros = F.expr(
-            f"timestampdiff(MICROSECOND, {_NTZ_EPOCH_SQL}, `{f.name}`)"
-        )
-        fixed = (8, _be(micros - F.lit(_PG_EPOCH_MICROS), 8))
-    elif isinstance(dt, T.DateType):
-        fixed = (4, _be(F.unix_date(c) - F.lit(_PG_EPOCH_DAYS), 4))
-    elif isinstance(dt, T.StringType):
-        cell = _len_prefixed(F.encode(c, "UTF-8"))
-    elif isinstance(dt, T.BinaryType):
-        cell = _len_prefixed(c)
-    elif isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-        # jsonb binary send format: version byte 0x01 + the JSON text
-        cell = _len_prefixed(
-            F.concat(F.lit(b"\x01"), F.encode(F.to_json(c), "UTF-8"))
-        )
-    elif isinstance(dt, T.DecimalType):
-        cell = _numeric_cell(f.name, dt.precision, dt.scale)
-    else:
-        raise ValueError(
-            f"COPY BINARY has no send format mapped for "
-            f"{dt.simpleString()} (use wire_format='csv')"
-        )
-    if fixed is not None:
-        nbytes, payload = fixed
-        cell = F.concat(F.lit(nbytes.to_bytes(4, "big")), payload)
-    return F.when(c.isNull(), F.lit(_PGCOPY_NULL)).otherwise(cell)
-
-
-def _numeric_cell(name: str, p: int, s: int) -> "F.Column":
-    """NUMERIC(p, s) in the numeric binary send format: int16 ndigits /
-    weight / sign / dscale header then base-10000 digit groups, most
-    significant first, aligned so a group boundary sits on the decimal
-    point (the wire's invariant — hence the fractional pad to a
-    multiple of 4 decimal digits).
-
-    Exactness discipline: the digit groups come from the decimal's
-    canonical STRING form — lpad/rpad/substring, all codegen, all
-    trivially exact.  Three arithmetic forms were tried first and each
-    REPRODUCED a corruption: floor(u/10^k) (decimal division rounds
-    HALF_UP before floor — 99999999.99 grew a phantom digit), an
-    unscaling multiply (the decimal(38,s) x decimal(m+1,0) TYPE rule
-    overflows precision 38 and ANSI-errors at runtime for p+m+2 > 38
-    even when the VALUE fits — decimal(38,0) died after the pre-DROP
-    validation passed), and fractional-modulus pmod chains (the
-    capped division result type silently rounded decimal(36,19)'s low
-    groups).  Spark's decimal-to-string cast always prints plain
-    notation with exactly ``s`` fraction digits, so string slicing is
-    the one representation with no numeric type rules to fight.
-
-    Leading zero groups ride along (numeric_recv accepts them; they
-    contribute 0), which keeps ndigits/weight compile-time constants
-    and the whole cell inside codegen.  EVERY decimal(p, s) is
-    supported: the string pipeline never builds a point-aligned
-    numeric intermediate, so the p+dpad <= 38 refusal the arithmetic
-    forms needed is gone (r11 fourth-pass review finding — the guard
-    cited deleted code)."""
-    dpad = (4 - s % 4) % 4
-    frac_groups = (s + dpad) // 4
-    int_groups = max(1, -(-(p - s) // 4))
-    ndigits = int_groups + frac_groups
-    weight = int_groups - 1
-    c = F.col(name)
-    # the sign comes off the STRING too: even F.abs() is unsafe here —
-    # measured corrupting decimal(36,19) (…0123456 -> …0123500, a
-    # 17-significant-digit rounding inside the abs/type chain)
-    txt = F.regexp_replace(c.cast("string"), "^-", "")
-    if s > 0:
-        int_str = F.substring_index(txt, ".", 1)
-        frac_str = F.substring_index(txt, ".", -1)
-    else:
-        int_str = txt
-        frac_str = F.lit("")
-    digits_str = F.concat(
-        F.lpad(int_str, 4 * int_groups, "0"),
-        F.rpad(frac_str, 4 * frac_groups, "0"),
-    )
-    parts = [
-        F.lit((8 + 2 * ndigits).to_bytes(4, "big")),  # field length
-        F.lit(ndigits.to_bytes(2, "big")),
-        F.lit((weight & 0xFFFF).to_bytes(2, "big")),
-        F.when(c < 0, F.lit((0x4000).to_bytes(2, "big"))).otherwise(
-            F.lit(b"\x00\x00")
-        ),
-        F.lit(s.to_bytes(2, "big")),
-    ]
-    for i in range(ndigits):
-        parts.append(
-            _be(F.substring(digits_str, 4 * i + 1, 4).cast("int"), 2)
-        )
-    return F.concat(*parts)
-
-
-def binary_copy_tuples(df: DataFrame) -> DataFrame:
-    """(rowbytes binary): each row as one complete PGCOPY tuple —
-    field-count prefix plus every cell — built entirely JVM-side."""
-    n = len(df.schema.fields)
-    cells = [_binary_cell(f) for f in df.schema.fields]
-    return df.select(
-        F.concat(F.lit(n.to_bytes(2, "big")), *cells).alias("rowbytes")
-    )
-
-
 @dataclass
 class PostgresCopySink:
     """Bulk sink into a live PostgreSQL via per-partition COPY.
@@ -489,7 +336,10 @@ class PostgresCopySink:
     ``table`` / ``mode`` / ``num_partitions`` knobs, same nested-column
     flattening — but the wire is Postgres's native COPY protocol, so the
     *dialect* DDL (JSONB/BYTEA/NUMERIC, ``schema_to_pg_ddl``) actually
-    executes on the server the reference targets.
+    executes on the server the reference targets.  The wire is CSV
+    (``COPY ... FROM STDIN (FORMAT CSV)``, lines from ``F.to_csv``), and
+    each task raises ``RuntimeError`` when the server's ``COPY n`` tag
+    differs from the rows it piped.
     """
 
     conninfo: dict[str, str]
@@ -506,34 +356,16 @@ class PostgresCopySink:
     # task-retry exposure as any plain INSERT/COPY appender (disable
     # spark.speculation for it, and prefer write_batch for guarantees).
     partition_tag: bool = False
-    # COPY wire format: 'csv' (F.to_csv lines) or 'binary' (PGCOPY
-    # tuples, also built JVM-side — binary_copy_tuples).  The e2e A/B
-    # at sf0.1 is in BASELINE.md: csv ships as the default (faster
-    # end-to-end on a shared box); binary is the option for
-    # server-CPU-bound topologies (2.1x cheaper parse).  All DDL types
-    # are supported on both wires except decimals whose point-aligned
-    # width exceeds 38 digits (binary refuses those up front).
-    wire_format: str = "csv"
 
     def write(self, df: DataFrame) -> str:
         schema_df = (
             df.withColumn("__part", F.lit(0)) if self.partition_tag else df
         )
+        # DDL generation refuses unmapped types, so it runs BEFORE the
+        # destructive DROP: a refused write leaves the old table intact
         ddl = schema_to_pg_ddl(self.table, schema_df.schema)
         if self.mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append/overwrite, got {self.mode!r}")
-        if self.wire_format not in ("csv", "binary"):
-            raise ValueError(
-                f"wire_format must be csv/binary, got {self.wire_format!r}"
-            )
-        binary = self.wire_format == "binary"
-        if binary:
-            # validate EVERY column's send format BEFORE the
-            # destructive DROP — otherwise a refused type (decimal)
-            # would leave an empty shell where the populated table was
-            # (r11 second-pass review finding)
-            for f_ in schema_df.schema.fields:
-                _binary_cell(f_)
         if self.mode == "overwrite":
             run_psql(self.conninfo, f"DROP TABLE IF EXISTS {self.table};")
         run_psql(self.conninfo, ddl)
@@ -549,21 +381,15 @@ class PostgresCopySink:
         # never round-robin here), so the partition_tag idempotent-
         # replace path keeps its stable task→rows mapping.  Measured
         # r15 at sf0.1: 1.60 s → 1.26 s per 600k-row write (min of 3).
-        if binary:
-            prepared = df.repartition(self.num_partitions, df.columns[0])
-        else:
-            prepared = prepare_for_copy(df).repartition(
-                self.num_partitions, df.columns[0]
-            )
+        prepared = prepare_for_copy(df).repartition(
+            self.num_partitions, df.columns[0]
+        )
         if self.partition_tag:
             prepared = prepared.withColumn("__part", F.spark_partition_id())
         col_list = ", ".join(prepared.columns)
-        if binary:
-            lines = binary_copy_tuples(prepared)
-        else:
-            lines = prepared.select(
-                F.to_csv(F.struct(*prepared.columns), _CSV_OPTS).alias("line")
-            )
+        lines = prepared.select(
+            F.to_csv(F.struct(*prepared.columns), _CSV_OPTS).alias("line")
+        )
         conninfo, table = dict(self.conninfo), self.table
         tagged = self.partition_tag
 
@@ -576,16 +402,9 @@ class PostgresCopySink:
             for pdf in batches:
                 if len(pdf):
                     n += len(pdf)
-                    if binary:
-                        # ONE bytes object per Arrow batch, like the
-                        # CSV twin's per-batch join — not one PyObject
-                        # per row
-                        chunks.append(b"".join(pdf["rowbytes"]))
-                    else:
-                        chunks.append("\n".join(pdf["line"]))
+                    chunks.append("\n".join(pdf["line"]))
             if n:
-                fmt = "BINARY" if binary else "CSV, NULL ''"
-                copy = f"COPY {table} ({col_list}) FROM STDIN (FORMAT {fmt})"
+                copy = f"COPY {table} ({col_list}) FROM STDIN (FORMAT CSV, NULL '')"
                 if tagged:
                     # one -c string = one implicit transaction: the
                     # delete and the copy commit or roll back together
@@ -594,13 +413,8 @@ class PostgresCopySink:
                         f"DELETE FROM {table} WHERE __part = {pid}; "
                         + copy
                     )
-                if binary:
-                    payload = (
-                        _PGCOPY_HEADER + b"".join(chunks) + _PGCOPY_TRAILER
-                    )
-                    run_psql(conninfo, copy, stdin_bytes=payload)
-                else:
-                    run_psql(conninfo, copy, stdin="\n".join(chunks) + "\n")
+                out = run_psql(conninfo, copy, stdin="\n".join(chunks) + "\n")
+                check_copy_tag(out, n, table)
             yield pd.DataFrame({"n": [n]})
 
         # the aggregate is the action that runs the COPY tasks; its value

@@ -212,7 +212,11 @@ def test_spread_noop_when_parallel_enough(spark):
     shuffled = spark.range(1000).coalesce(1)
     assert spread(shuffled) is shuffled  # no file lineage -> untouched
     onefile = load_table(spark, SF_SMOKE, "documents")
-    assert spread(onefile).rdd.getNumPartitions() >= 8
+    # the default target is the cluster's parallelism, an explicit one
+    # is honoured exactly — independent of the host's core count
+    default = spark.sparkContext.defaultParallelism
+    assert spread(onefile).rdd.getNumPartitions() == default
+    assert spread(onefile, 8).rdd.getNumPartitions() == 8
 
 
 def test_filter_pushdown_survives_spread(spark):

@@ -283,10 +283,12 @@ def test_partition_tagged_copy_is_task_retry_idempotent(spark, pgsrv):
     assert first == docs.count() == second
 
 
-def _binary_tricky_df(spark):
-    """The tricky frame plus the IEEE/integer edge values binary must
-    carry bit-exactly: NaN, +-Inf, -0.0, Long.MIN/MAX, pre-2000
-    temporals, and NUMERIC at precision/scale edges."""
+def _edge_values_df(spark):
+    """The tricky frame plus the IEEE/integer/temporal edge values the
+    CSV wire must carry exactly: NaN, +-Inf, -0.0 and a float32 column,
+    Long.MIN/MAX and the short extremes, pre-1970 and 2000-01-01
+    timestamps (NTZ and session-tz), NUMERIC at precision/scale edges,
+    bytea, jsonb and unicode."""
     schema = T.StructType(
         [
             T.StructField("id", T.LongType(), False),
@@ -299,14 +301,9 @@ def _binary_tricky_df(spark):
             T.StructField("blob", T.BinaryType(), True),
             T.StructField("day", T.DateType(), True),
             T.StructField("at", T.TimestampNTZType(), True),
-            # session-tz TimestampType exercises the one _binary_cell
-            # branch where timezone semantics enter the wire (cast
-            # through timestamp_ntz to match CSV's session-local
-            # render) — r11 second-pass review finding
+            # session-tz TimestampType: the session-local wall time must
+            # land in the tz-less TIMESTAMP column
             T.StructField("attz", T.TimestampType(), True),
-            # NUMERIC binary send format (base-10000 groups): precision
-            # edges, negative, zero, and a high-scale column whose
-            # point-alignment needs a fractional pad digit
             T.StructField("price", T.DecimalType(12, 2), True),
             T.StructField("fine", T.DecimalType(20, 11), True),
             T.StructField("tags", T.ArrayType(T.StringType()), True),
@@ -334,131 +331,112 @@ def _binary_tricky_df(spark):
     return spark.createDataFrame(rows, schema)
 
 
-def test_copy_binary_matches_csv_wire(spark, pgsrv):
-    """VERDICT r10 item 4: the PGCOPY binary wire lands the SAME table
-    contents as the CSV wire — checked server-side with EXCEPT ALL over
-    every edge value (IEEE specials, integer extremes, NULL vs empty
-    string, unicode, bytea, jsonb, both sides of the 2000-01-01 binary
-    temporal epoch).  The A/B wall numbers live in BASELINE.md; csv
-    stays the shipped default (faster end-to-end on this topology),
-    binary is the option for server-CPU-bound deployments (measured
-    2.1x cheaper server-side parse)."""
-    df = _binary_tricky_df(spark)
-    for wire in ("csv", "binary"):
-        P.PostgresCopySink(
-            pgsrv.conninfo(),
-            f"wire_{wire}",
-            mode="overwrite",
-            num_partitions=2,
-            wire_format=wire,
-        ).write(df)
-    diff = P.run_psql(
-        pgsrv.conninfo(),
-        """
-        SELECT count(*) FROM (
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
-                 blob, day, at, attz, price, fine, tags FROM wire_csv
-          EXCEPT ALL
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
-                 blob, day, at, attz, price, fine, tags FROM wire_binary
-          UNION ALL
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
-                 blob, day, at, attz, price, fine, tags FROM wire_binary
-          EXCEPT ALL
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
-                 blob, day, at, attz, price, fine, tags FROM wire_csv) x;
-        """,
-    ).strip()
-    assert diff == "0", diff
-    n = P.run_psql(
-        pgsrv.conninfo(), "SELECT count(*) FROM wire_binary;"
-    ).strip()
-    assert n == "4"
-    # jsonb payload is real jsonb through the binary wire too
-    j = P.run_psql(
-        pgsrv.conninfo(),
-        "SELECT tags->>1 FROM wire_binary WHERE id = 3;",
-    ).strip()
-    assert j == "中文"
-
-
-def test_copy_binary_roundtrip_read_back(spark, pgsrv):
-    """Binary-written rows read back value-exact through the bounded
-    parallel COPY-out path (same assertion family as the csv twin)."""
-    df = _binary_tricky_df(spark).where("id <> 1")  # NaN != NaN in Row eq
+def _write_edge_values(spark, pgsrv, table):
+    df = _edge_values_df(spark)
     P.PostgresCopySink(
-        pgsrv.conninfo(),
-        "wire_rt",
-        mode="overwrite",
-        num_partitions=2,
-        wire_format="binary",
+        pgsrv.conninfo(), table, mode="overwrite", num_partitions=2
     ).write(df)
+    assert P.run_psql(
+        pgsrv.conninfo(), f"SELECT count(*) FROM {table};"
+    ).strip() == "4"
+    return df
+
+
+def test_copy_csv_edge_values_roundtrip(spark, pgsrv):
+    """Every edge value lands through the CSV wire and reads back equal
+    to the input over the bounded parallel COPY-out path.  NaN != NaN
+    and -0.0 == 0.0 in Row equality, so NaN is checked with isnan and
+    -0.0 by its sign."""
+    import math
+
+    df = _write_edge_values(spark, pgsrv, "edge_csv")
     back = P.read_back(
         spark,
         pgsrv.conninfo(),
-        "wire_rt",
+        "edge_csv",
         df.schema,
         partition_column="id",
-        lower=2,
+        lower=1,
         upper=4,
         num_partitions=2,
     )
-    got = sorted(back.collect(), key=lambda r: r["id"])
-    want = sorted(df.collect(), key=lambda r: r["id"])
+    got = {r["id"]: r.asDict() for r in back.collect()}
+    want = {r["id"]: r.asDict() for r in df.collect()}
+    assert sorted(got) == [1, 2, 3, 4]
+    assert math.isnan(got[1].pop("ratio")) and math.isnan(want[1].pop("ratio"))
+    assert math.copysign(1.0, got[3]["ratio"]) == -1.0
     assert got == want
 
 
-def test_copy_binary_refusal_is_non_destructive(spark, pgsrv):
-    """An unsupported column type must refuse BEFORE the overwrite
-    DROP, so a populated table survives (r11 second-pass review
-    finding — the old order left an empty shell).  Every DDL-mapped
-    type now has a binary send format (the r11 fourth-pass review
-    lifted the last decimal-width refusal: the string-slicing pipeline
-    never builds a point-aligned numeric intermediate), so the trigger
-    here is a type with NO Postgres mapping at all — which fails in
-    DDL generation, still before the DROP."""
+def test_copy_csv_edge_values_server_text(spark, pgsrv):
+    """What the CSV wire lands is what the server holds: the float
+    specials, the wall times on both sides of 1970 and 2000, bytea and
+    jsonb, checked by the server's own ``::text`` rendering."""
+    _write_edge_values(spark, pgsrv, "edge_csv_text")
+    floats = P.run_psql(
+        pgsrv.conninfo(),
+        "SELECT id, ratio::text, r4::text FROM edge_csv_text ORDER BY id;",
+    ).splitlines()
+    assert floats == [
+        "1|NaN|-2.25",
+        "2|Infinity|",
+        "3|-0|-Infinity",
+        "4|3.14159|0",
+    ]
+    # the wall time lands as written on both sides of 1970 and 2000
+    temporal = P.run_psql(
+        pgsrv.conninfo(),
+        "SELECT id, at::text, attz::text FROM edge_csv_text "
+        "WHERE id IN (1, 4) ORDER BY id;",
+    ).splitlines()
+    assert temporal == [
+        "1|1969-12-31 23:59:59.999999|1969-12-31 23:59:59.999999",
+        "4|2000-01-01 00:00:00|2000-02-29 12:00:00",
+    ]
+    # bytea and jsonb are real server types, not text
+    j = P.run_psql(
+        pgsrv.conninfo(),
+        "SELECT id, tags->>1, encode(blob, 'hex') FROM edge_csv_text "
+        "WHERE id IN (3, 4) ORDER BY id;",
+    ).splitlines()
+    assert j == ["3|中文|", "4||dead"]
+
+
+def test_copy_refusal_is_non_destructive(spark, pgsrv):
+    """A column type with no Postgres mapping must refuse BEFORE the
+    overwrite DROP, so a populated table survives (the old order left an
+    empty shell).  DDL generation raises, and it runs before the DROP."""
     seed = spark.createDataFrame([(1, "keep")], "id long, note string")
     P.PostgresCopySink(
-        pgsrv.conninfo(), "wire_dec", mode="overwrite", num_partitions=1
+        pgsrv.conninfo(), "refuse_t", mode="overwrite", num_partitions=1
     ).write(seed)
     df = spark.range(1).select(
         "id", F.expr("interval '1' day").alias("iv")
     )
-    sink = P.PostgresCopySink(
-        pgsrv.conninfo(),
-        "wire_dec",
-        mode="overwrite",
-        wire_format="binary",
-    )
+    sink = P.PostgresCopySink(pgsrv.conninfo(), "refuse_t", mode="overwrite")
     with pytest.raises(TypeError, match="no Postgres mapping"):
         sink.write(df)
     out = P.run_psql(
-        pgsrv.conninfo(), "SELECT id, note FROM wire_dec;"
+        pgsrv.conninfo(), "SELECT id, note FROM refuse_t;"
     ).strip()
     assert out == "1|keep"
 
 
-def test_copy_binary_decimal_edge_widths(spark, pgsrv):
-    """r11 third-pass findings, all reproduced pre-fix: decimal(38,0)
-    passed validation then died at COPY runtime (destroying the
-    overwritten table), decimal(20,19) threw NumberFormatException
-    from an int64-overflowing literal, and decimal(36,19) was silently
-    CORRUPTED by Spark's own abs() (…0123456 -> …0123500).  The
-    string-slicing digit extraction ships because every arithmetic
-    form failed one of these; this pins the full-width/high-scale
-    matrix value-equal to the CSV wire."""
+def test_copy_csv_decimal_edge_widths(spark, pgsrv):
+    """Full-width and high-scale NUMERICs — decimal(38,0), (20,19),
+    (36,19), (38,3), (38,38) — land through the CSV wire and read back
+    equal to the input Decimals, and the server prints every digit the
+    input holds.  Values are built from signed digit strings: scaleb(),
+    division and even unary minus round to the 28-digit default context
+    and would drop the low digits this test exists to pin."""
     import random
 
     rng = random.Random(77)
 
     def rnd(p, s):
-        # scaleb, NOT division: the default decimal context rounds the
-        # quotient to 28 significant digits, silently zeroing the low
-        # base-10000 groups this test exists to pin (r11 fourth-pass
-        # review finding, reproduced with this very seed)
         digs = "".join(rng.choice("0123456789") for _ in range(p))
-        v = Decimal(digs).scaleb(-s)
-        return -v if rng.random() < 0.5 else v
+        sign = "-" if rng.random() < 0.5 else ""
+        return Decimal(f"{sign}{digs}E-{s}")
 
     rows = [
         (
@@ -478,30 +456,64 @@ def test_copy_binary_decimal_edge_widths(spark, pgsrv):
         (10 + i, rnd(38, 0), rnd(20, 19), rnd(36, 19))
         for i in range(25)
     ]
-    rows = [r + (rnd(38, 3), rnd(38, 38)) for r in rows[:3]] + [
-        r + (rnd(38, 3), rnd(38, 38)) for r in rows[3:]
-    ]
+    rows = [r + (rnd(38, 3), rnd(38, 38)) for r in rows]
     df = spark.createDataFrame(
         rows,
         "id long, big decimal(38,0), fine decimal(20,19), "
         "mid decimal(36,19), wide3 decimal(38,3), allfrac decimal(38,38)",
     )
-    for wire in ("csv", "binary"):
-        P.PostgresCopySink(
-            pgsrv.conninfo(),
-            f"dedge_{wire}",
-            mode="overwrite",
-            num_partitions=2,
-            wire_format=wire,
-        ).write(df)
-    diff = P.run_psql(
+    P.PostgresCopySink(
+        pgsrv.conninfo(), "dedge_csv", mode="overwrite", num_partitions=2
+    ).write(df)
+    back = P.read_back(
+        spark, pgsrv.conninfo(), "dedge_csv", df.schema
+    ).collect()
+    assert sorted(tuple(r) for r in back) == sorted(rows)
+    # every input already carries its column's scale as its exponent,
+    # so plain formatting spells what the server should print
+    want_text = sorted(
+        "|".join([str(r[0])] + ["" if v is None else format(v, "f") for v in r[1:]])
+        for r in rows
+    )
+    got_text = P.run_psql(
+        pgsrv.conninfo(),
+        "SELECT id, big::text, fine::text, mid::text, wide3::text, "
+        "allfrac::text FROM dedge_csv;",
+    ).splitlines()
+    assert sorted(got_text) == want_text
+
+
+def test_copy_tag_mismatch_raises():
+    """The per-task row-count check: psql's unquiet stdout must end in
+    ``COPY <rows piped>``; a different count or no tag at all raises."""
+    P.check_copy_tag("COPY 3\n", 3, "t")
+    P.check_copy_tag("DELETE 2\nCOPY 3\n", 3, "t")  # partition_tag path
+    with pytest.raises(RuntimeError, match="piped 3 rows .* reported 2"):
+        P.check_copy_tag("COPY 2\n", 3, "t")
+    with pytest.raises(RuntimeError, match="no COPY tag"):
+        P.check_copy_tag("", 3, "t")
+
+
+def test_copy_sink_fails_loudly_when_server_skips_rows(spark, pgsrv):
+    """Rows the server drops (here a BEFORE INSERT trigger that skips
+    id = 2) shrink the ``COPY n`` tag below the rows the task piped, and
+    the write must fail instead of returning as if every row landed."""
+    df = spark.createDataFrame([(i, f"r{i}") for i in range(1, 5)], "id long, v string")
+    sink = P.PostgresCopySink(
+        pgsrv.conninfo(), "skip_t", mode="overwrite", num_partitions=1
+    )
+    sink.write(df.limit(0))
+    P.run_psql(
         pgsrv.conninfo(),
         """
-        SELECT count(*) FROM (
-          SELECT * FROM dedge_csv EXCEPT ALL SELECT * FROM dedge_binary
-          UNION ALL
-          SELECT * FROM dedge_binary EXCEPT ALL SELECT * FROM dedge_csv
-        ) x;
+        CREATE FUNCTION skip_two() RETURNS trigger LANGUAGE plpgsql AS
+          $$ BEGIN IF NEW.id = 2 THEN RETURN NULL; END IF; RETURN NEW; END $$;
+        CREATE TRIGGER skip_two BEFORE INSERT ON skip_t
+          FOR EACH ROW EXECUTE FUNCTION skip_two();
         """,
-    ).strip()
-    assert diff == "0", diff
+    )
+    append = P.PostgresCopySink(
+        pgsrv.conninfo(), "skip_t", mode="append", num_partitions=1
+    )
+    with pytest.raises(Exception, match="piped 4 rows but the server reported 3"):
+        append.write(df)
